@@ -375,13 +375,13 @@ def pq_index_append(
     ``compact_state`` analogue for the vector tier).
 
     Caller-supplied ``n_existing``/``n_new`` are TRUSTED for the drift
-    check (ADVICE r11 #4): the caller owns count integrity — a stale or
+    check: the caller owns count integrity — a stale or
     wrong sidecar value (e.g. the documented crash window where codes
     commit but the count does not) weakens the staleness refusal, and
     ``codes`` is deliberately not re-aggregated here to cross-check
     (that scan is exactly what the sidecar exists to avoid). Negative
     values are rejected outright; anything else is on the caller
-    (``ingest_ann`` repairs its sidecar via ``_backfill_pq_counts``
+    (``ingest_ann`` repairs its sidecar via ``_backfill_counts``
     before ever passing a count)."""
     _check_pq_append_contract(
         cent, codes, new_e, max_drift, n_existing, n_new,

@@ -5,11 +5,9 @@ two-level global rank, LSH candidate mining) must materialize
 intermediate tables: without a lineage cut, a table read by two plan
 branches re-executes its upstream pipeline per branch — and for
 ``repartitionByRange`` inputs the two executions may even sample
-different range boundaries (the r4 ranking bug). Every such site used
-to hand-roll ``localCheckpoint(eager=True)`` with a "swap for reliable
-checkpoint at cluster scale" comment; this helper makes that swap an
-actual runtime switch instead of a code edit (VERDICT.md r4,
-Next-round #2).
+different range boundaries. This helper makes the choice between an
+executor-local and a reliable checkpoint a runtime switch instead of a
+code edit.
 
 Modes (per-call argument, else session conf ``MODE_CONF``, else local):
 
@@ -22,25 +20,23 @@ Modes (per-call argument, else session conf ``MODE_CONF``, else local):
   cluster scale). Survives executor loss mid-iteration: blocks are
   re-read from the DFS, nothing is recomputed. Requires the dir to be
   set; raises a clear error otherwise rather than silently degrading.
-- ``persist`` — ``persist(DISK_ONLY)`` forced eager with a ``count()``.
-  Middle ground: lineage is kept, so a lost block is *recomputed* from
-  upstream (correct but potentially expensive, and for range-sampled
-  inputs the recompute reuses the already-written shuffle output, so
-  boundary consistency holds unless the shuffle data itself is lost).
-  Use when no DFS checkpoint dir exists but executor loss must not
-  fail the job outright. NOT for iterative loops: because lineage is
-  kept, each iteration's plan nests every prior iteration's — analysis
-  cost grows superlinearly (round-8 measurement: `dedup_cluster`
-  >200s under persist vs 3.6s under local; PROFILE_ITERATIVE.json).
-  Iterative callers need a true lineage CUT (local/checkpoint).
+
+Both modes CUT lineage. Iterative callers need that: a mode that kept
+lineage (e.g. ``persist``) would nest every prior iteration's plan in
+each new one, and analysis cost grows superlinearly
+(PROFILE_ITERATIVE.json: ``dedup_cluster`` >200 s vs 3.6 s).
 """
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame
 
 MODE_CONF = "spark.odl_etl.materialize.mode"
-_MODES = ("local", "checkpoint", "persist")
+_MODES = ("local", "checkpoint")
+# Serializes the session-global AQE toggle of materialize_aqe_off.
+_AQE_LOCK = threading.Lock()
 
 
 def fits_broadcast(df: DataFrame, rows: int | None = None) -> bool:
@@ -90,15 +86,13 @@ def materialize_prepartitioned(
     an AdaptiveSparkPlanExec whose reported outputPartitioning is
     UnknownPartitioning — a checkpoint taken with AQE ON silently LOSES
     the pre-partitioning and every downstream join re-exchanges the
-    stored table (measured: plans/r18/cc_prepart_aqe_probe.txt; the r17
-    demo only showed the elision because it disabled AQE). Toggling AQE
+    stored table (measured: plans/r18/cc_prepart_aqe_probe.txt). Toggling AQE
     off for just this one action records hashpartitioning(cols, N) on
     the cut; EnsureRequirements (which runs statically, AQE or not)
     then elides the exchange in every consumer. N comes from
     spark.sql.shuffle.partitions — the scale-adaptive conf, not a local
     constant. The toggle is session-visible for the duration of this
-    one eager action (builds are single-threaded per session here;
-    concurrent-build sessions should serialize calls)."""
+    one eager action (see ``materialize_aqe_off``)."""
     parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
     return materialize_aqe_off(df.repartition(parts, *cols), mode)
 
@@ -109,14 +103,22 @@ def materialize_aqe_off(df: DataFrame, mode: str | None = None) -> DataFrame:
     AdaptiveSparkPlanExec wrapper's UnknownPartitioning (see
     ``materialize_prepartitioned``). Use when ``df``'s own plan already
     establishes the partitioning downstream consumers need (e.g. a
-    sort-merge join output keyed like the loop join)."""
+    sort-merge join output keyed like the loop join).
+
+    Calls are serialized by a module lock held across set -> cut ->
+    restore: two overlapping calls (e.g. a streaming cluster fold in a
+    foreachBatch thread next to a main-thread pagerank) would
+    otherwise let the second save the first's ``"false"`` as its
+    previous value and leave AQE off for the rest of the session. Other
+    threads' queries planned during the cut still run without AQE."""
     spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        return materialize(df, mode)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    with _AQE_LOCK:
+        prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            return materialize(df, mode)
+        finally:
+            spark.conf.set("spark.sql.adaptive.enabled", prev)
 
 
 def materialize(df: DataFrame, mode: str | None = None) -> DataFrame:
@@ -138,13 +140,7 @@ def materialize(df: DataFrame, mode: str | None = None) -> DataFrame:
             raise ValueError(
                 "materialize(mode='checkpoint') needs a reliable checkpoint "
                 "dir: call spark.sparkContext.setCheckpointDir('<dfs path>') "
-                "first (or use mode='local'/'persist')"
+                "first (or use mode='local')"
             )
         return df.checkpoint(eager=True)
-    if mode == "persist":
-        from pyspark import StorageLevel
-
-        out = df.persist(StorageLevel.DISK_ONLY)
-        out.count()  # force materialization NOW, like the eager checkpoints
-        return out
     raise ValueError(f"materialize: unknown mode {mode!r}; expected one of {_MODES}")

@@ -24,7 +24,7 @@ different partitioning than the one the window ranked (observed at
 sf0.1: ranks were not even a permutation; round-4 fix). The eager
 ``materialize`` pins one physical partitioning that both branches
 read — the same two-pass posture as TeraSort's sampled range sort; the
-cut mode (executor-local vs reliable checkpoint vs persist) is a
+cut mode (executor-local vs reliable checkpoint) is a
 runtime switch, see ``operators/materialize.py``.
 """
 

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from odl_etl_spark.operators.upsert import upsert_partitioned
+from odl_etl_spark.streaming.state import read_or_none, start_foreach_batch
 
 N_BUCKETS = 16
 _COLS = ["user_id", "event_id", "event_type", "value", "ts"]
@@ -55,16 +56,11 @@ def merge_cdc_batch(
     batch_df: DataFrame, state_path: str, n_buckets: int = N_BUCKETS
 ) -> None:
     """MERGE one micro-batch of change events into the state table."""
-    from pyspark.errors import AnalysisException
-
     spark = batch_df.sparkSession
     upd = _latest_per_key(batch_df.select(*_COLS)).withColumn(
         "_bucket", F.pmod("user_id", F.lit(n_buckets)).cast("int")
     )
-    try:
-        existing = spark.read.parquet(state_path)
-    except AnalysisException:
-        existing = None
+    existing = read_or_none(spark, state_path)
     if existing is not None:
         # Candidates = batch winners ∪ current rows of the SAME keys
         # (semi join — untouched keys never enter the merge); the
@@ -99,11 +95,4 @@ def cdc_apply_stream(
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         merge_cdc_batch(batch_df, state_path, n_buckets)
 
-    writer = (
-        events.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(events, apply_batch, checkpoint, available_now)

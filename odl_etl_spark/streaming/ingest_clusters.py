@@ -12,16 +12,15 @@ iterative closure runs over the CONTRACTED batch-sized graph only.
 
 Crash/replay posture (same discipline as the rest of the ingest tier):
 
-  * The clusters rewrite is committed ATOMICALLY through the staged-swap
-    used everywhere else in the tier (write to ``clusters_compacting``,
-    two renames, ``recover_torn_swap`` at fold start). Partial-shard
-    dynamic overwrite was BUILT FIRST and rejected by its own torn-state
-    test: with some shards committed and some not, the replayed batch's
-    endpoints resolve through the already-merged representatives, the
-    stale component never re-enters the contracted graph, and the stale
-    rows are permanently wrong — replay convergence holds for the
-    whole-store swap, not for per-shard partial commits. (The negative
-    experiment is preserved in the test's docstring.)
+  * The clusters rewrite is committed ATOMICALLY through the tier's
+    staged swap (``state.staged_swap``; ``recover_torn_swap`` at fold
+    start). Partial-shard dynamic overwrite was built first and rejected
+    by its own torn-state test: with some shards committed and some not,
+    the replayed batch's endpoints resolve through the already-merged
+    representatives, the stale component never re-enters the contracted
+    graph, and the stale rows are permanently wrong — replay convergence
+    holds for the whole-store swap, not for per-shard partial commits.
+    (The negative experiment is preserved in the test's docstring.)
   * The fold watermark (highest folded ``_batch_id``) is committed AFTER
     the swap — a crash between the two replays the fold over the
     already-folded store, where every replayed edge contracts to a
@@ -49,6 +48,7 @@ from pyspark.sql import functions as F
 
 from odl_etl_spark.operators.components import connected_components_incremental
 from odl_etl_spark.streaming.ingest_dedup import emitted_pairs
+from odl_etl_spark.streaming.state import recover_torn_swap, staged_swap
 
 _CLUSTERS = "clusters"
 _WATERMARK = "clusters_watermark"
@@ -110,11 +110,6 @@ def fold_pairs_into_clusters(
     Idempotent under replay: a crash after the clusters swap but before
     the watermark write re-runs the fold with the same edges, which
     converges to the identical labeling (see module docstring)."""
-    from odl_etl_spark.streaming.ingest_dedup import (
-        mark_stage_complete,
-        recover_torn_swap,
-    )
-
     recover_torn_swap(state_dir, subs=(_CLUSTERS,))
     c_path, wm_path = _paths(state_dir)
     # Validate the shard stamp BEFORE any early return: a misconfigured
@@ -159,10 +154,7 @@ def fold_pairs_into_clusters(
         # Nothing standing and nothing to fold: commit only the
         # watermark (an empty partitioned write would leave a
         # footer-less dir the next read cannot infer a schema from).
-        spark.createDataFrame([(int(new_upto),)], "upto bigint").write.mode(
-            "overwrite"
-        ).parquet(wm_path)
-        return int(new_upto)
+        return _write_watermark(spark, wm_path, new_upto)
     labels = (
         stored.select("node", "component")
         if stored is not None
@@ -175,30 +167,19 @@ def fold_pairs_into_clusters(
         "component",
         shard,
     )
-    # Atomic whole-store swap (see module docstring for why partial
-    # per-shard commits were rejected): stage fully, then rename(s);
-    # recover_torn_swap (run at fold start) completes or rolls back a
-    # torn swap. The FIRST fold goes through the same staging — a torn
-    # direct write to the live dir would have no swap markers for
-    # recovery to heal (it reads the staged dir's completion stamp,
-    # mark_stage_complete, to tell a complete stage from a torn one).
-    import shutil
-
-    tmp = c_path + "_compacting"
-    shutil.rmtree(tmp, ignore_errors=True)
-    updated.write.mode("overwrite").partitionBy("_shard").parquet(tmp)
-    mark_stage_complete(tmp)
-    if stored is None:
-        os.rename(tmp, c_path)
-    else:
-        prevdir = c_path + "_old"
-        shutil.rmtree(prevdir, ignore_errors=True)
-        os.rename(c_path, prevdir)
-        os.rename(tmp, c_path)
-        shutil.rmtree(prevdir)
+    # Whole-store swap (see module docstring for why partial per-shard
+    # commits were rejected). The FIRST fold is staged too: a torn direct
+    # write to the live dir would leave recovery no completion stamp to
+    # tell a complete stage from a torn one.
+    with staged_swap(c_path) as stage:
+        updated.write.mode("overwrite").partitionBy("_shard").parquet(stage)
     # Watermark LAST: a crash before this line replays the fold, which
     # is convergent; a watermark written first would silently skip it.
-    spark.createDataFrame([(int(new_upto),)], "upto bigint").write.mode(
+    return _write_watermark(spark, wm_path, new_upto)
+
+
+def _write_watermark(spark: SparkSession, wm_path: str, upto: int) -> int:
+    spark.createDataFrame([(int(upto),)], "upto bigint").write.mode(
         "overwrite"
     ).parquet(wm_path)
-    return int(new_upto)
+    return int(upto)

@@ -12,18 +12,18 @@ arrival with the LLM dedup tier attached.
 
 Scale + correctness posture:
 
-  * The band index is a REAL stored table (parquet, partitioned by
-    ``_batch_id``) — the corpus is banded once at bootstrap
-    (``_batch_id = -1``), each batch is banded once on arrival, and no
-    raw text is ever re-shingled for a later batch's probe
+  * The band index is a REAL stored table (the ``_batch_id``-partitioned
+    store of ``streaming/state.py``) — the corpus is banded once at
+    bootstrap (``_batch_id = -1``), each batch is banded once on arrival,
+    and no raw text is ever re-shingled for a later batch's probe
     (``operators/dedup.minhash_band_index`` + the probe's
     ``existing_index`` path). At 100 TB the index is ~16 small rows per
     document, re-partitionable by ``_band`` for probe-side pruning.
-  * All three state writes (pairs, index, docs) are dynamic-partition
-    overwrites keyed by ``_batch_id``, so an at-least-once replay of a
-    micro-batch rewrites its own partitions in place — the loop is
-    replay-idempotent without a transaction log (same posture as
-    ``streaming/cdc.py`` / the lake sink).
+  * All three state writes (pairs, index, docs) are ``state.commit_batch``
+    commits, so an at-least-once replay of a micro-batch rewrites its own
+    partitions in place — the loop is replay-idempotent without a
+    transaction log (same posture as ``streaming/cdc.py`` / the lake
+    sink).
   * Emitted pairs are {(new, previously-indexed)} with batch
     provenance; intra-batch duplicates are by contract the in-batch
     ``dedup_near`` job's concern (see the ``dedup_stream_ingest``
@@ -39,17 +39,20 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from odl_etl_spark.operators.dedup import minhash_band_index, minhash_lsh_probe
+from odl_etl_spark.streaming.state import (
+    commit_batch,
+    committed_before,
+    fold_into_baseline,
+    read_bootstrapped,
+    read_or_none,
+    recover_torn_swap,
+    refuse_folding_tip,
+    start_foreach_batch,
+)
 
 _DOC_COLS = ["doc_id", "text", "source"]
-
-
-def _read_or_none(spark: SparkSession, path: str) -> DataFrame | None:
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException:
-        return None
+# The swap units, docs first: every multi-store write follows that order.
+_STORES = ("docs", "index")
 
 
 def bootstrap_corpus_index(
@@ -58,21 +61,13 @@ def bootstrap_corpus_index(
     """Band the standing corpus ONCE and commit it as ``_batch_id=-1``
     of the index table (and the docs store). Idempotent: re-running
     overwrites the same partitions with identical rows."""
-    index = minhash_band_index(corpus, "doc_id", "text", n=n).withColumn(
-        "_batch_id", F.lit(-1)
-    )
+    index = minhash_band_index(corpus, "doc_id", "text", n=n)
     # docs FIRST, index LAST: ingest_dedup_stream gates auto-bootstrap on
     # the index artifact, so a crash between the two writes leaves a state
     # that re-runs bootstrap on restart instead of wedging every batch on
     # "not bootstrapped" (torn bootstrap is self-healing).
-    corpus.select(*_DOC_COLS).withColumn("_batch_id", F.lit(-1)).write.mode(
-        "overwrite"
-    ).option("partitionOverwriteMode", "dynamic").partitionBy(
-        "_batch_id"
-    ).parquet(os.path.join(state_dir, "docs"))
-    index.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("_batch_id").parquet(os.path.join(state_dir, "index"))
+    commit_batch(corpus.select(*_DOC_COLS), os.path.join(state_dir, "docs"), -1)
+    commit_batch(index, os.path.join(state_dir, "index"), -1)
 
 
 def probe_and_commit_batch(
@@ -84,129 +79,33 @@ def probe_and_commit_batch(
 ) -> None:
     """foreachBatch handler: probe one micro-batch against the stored
     index, land its pairs, then commit its index rows and documents."""
-    spark = batch_df.sparkSession
     batch = batch_df.select(*_DOC_COLS)
-    docs = _read_or_none(spark, os.path.join(state_dir, "docs"))
-    index = _read_or_none(spark, os.path.join(state_dir, "index"))
-    if docs is None or index is None:
-        raise RuntimeError(
-            "ingest_dedup state not bootstrapped - call "
-            "bootstrap_corpus_index(corpus, state_dir) first"
-        )
-    # A replay of batch_id must probe the same "before me" state: exclude
-    # this batch's own (possibly already-committed) partitions.
-    existing_docs = docs.where(F.col("_batch_id") != batch_id).drop("_batch_id")
-    existing_index = index.where(F.col("_batch_id") != batch_id).drop("_batch_id")
+    docs_path, index_path = (os.path.join(state_dir, s) for s in _STORES)
+    docs, index = read_bootstrapped(
+        batch_df.sparkSession,
+        [docs_path, index_path],
+        "bootstrap_corpus_index(corpus, state_dir)",
+    )
     b_index = minhash_band_index(batch, "doc_id", "text", n=n)
+    # A replay of batch_id must probe the same "before me" state.
     pairs = minhash_lsh_probe(
         batch,
-        existing_docs,
+        committed_before(docs, batch_id),
         "doc_id",
         "text",
         n=n,
         threshold=threshold,
         new_index=b_index,
-        existing_index=existing_index,
-    ).withColumn("_batch_id", F.lit(batch_id))
-    # Per-write dynamic partitionOverwriteMode (Spark's session default is
-    # STATIC): without it, each commit would truncate the whole table to
-    # this batch's partition, destroying the standing corpus index
-    # (_batch_id=-1) and all prior batches. Matches io/sinks.py and
-    # operators/upsert.py rather than relying on session conf.
-    pairs.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("_batch_id").parquet(os.path.join(state_dir, "pairs"))
+        existing_index=committed_before(index, batch_id),
+    )
+    commit_batch(pairs, os.path.join(state_dir, "pairs"), batch_id)
     # Docs BEFORE index (the invariant operators/dedup.py's probe
     # assumes: every index row has a backing doc). A torn commit then
     # leaves "docs without index rows" — equivalent to the batch not yet
     # committed, fixed by replay — instead of "index rows without docs",
     # which the probe's verify joins would silently drop forever.
-    batch.withColumn("_batch_id", F.lit(batch_id)).write.mode(
-        "overwrite"
-    ).option("partitionOverwriteMode", "dynamic").partitionBy(
-        "_batch_id"
-    ).parquet(os.path.join(state_dir, "docs"))
-    b_index.withColumn("_batch_id", F.lit(batch_id)).write.mode(
-        "overwrite"
-    ).option("partitionOverwriteMode", "dynamic").partitionBy(
-        "_batch_id"
-    ).parquet(os.path.join(state_dir, "index"))
-
-
-_STAGE_MARKER = "_STAGE_COMPLETE"
-
-
-def mark_stage_complete(staged: str) -> None:
-    """Stamp a fully-staged swap directory. Every staging producer calls
-    this AFTER all staging writes finish and BEFORE the live dir is
-    touched; ``recover_torn_swap`` rolls an orphaned stage forward only
-    when the stamp proves the stage completed. (Spark's own ``_SUCCESS``
-    can't serve as the witness: the session default
-    ``partitionOverwriteMode=dynamic`` commits partitioned overwrites
-    without one, and the PQ stage is a multi-relation parent dir whose
-    per-relation markers sit one level down.)"""
-    with open(os.path.join(staged, _STAGE_MARKER), "w") as f:
-        f.write("complete")
-
-
-def _stage_is_complete(staged: str) -> bool:
-    return os.path.exists(os.path.join(staged, _STAGE_MARKER)) or os.path.exists(
-        os.path.join(staged, "_SUCCESS")
-    )
-
-
-def recover_torn_swap(state_dir: str, subs: tuple[str, ...] = ("docs", "index")) -> None:
-    """Crash recovery for ``compact_state``'s directory swap (ADVICE r8
-    #2). The swap window — between ``os.rename(path, prev)`` and
-    ``os.rename(tmp, path)`` — leaves the live dir ABSENT with the data
-    intact at ``<sub>_old`` (and a complete staged copy at
-    ``<sub>_compacting``: the staging write finishes before the live dir
-    is ever renamed away). Without recovery, a stream restart would
-    mistake that for a fresh state and re-bootstrap a corpus-only index,
-    silently discarding every committed batch's index rows. Roll the
-    swap FORWARD when the staged copy exists AND is complete (the
-    producer's ``mark_stage_complete`` stamp — a first-write staging
-    can tear with the live dir absent, unlike a compaction's, whose
-    staging finishes while the live dir still exists), BACK to the
-    ``_old`` backup otherwise; when the live dir is present, leftovers
-    from either side of the window are just stale and are removed.
-    ``subs`` names the state subdirectories (the ANN ingest loop,
-    streaming/ingest_ann.py, reuses this with its single store)."""
-    import shutil
-
-    for sub in subs:
-        path = os.path.join(state_dir, sub)
-        staged = path + "_compacting"
-        prev = path + "_old"
-        if os.path.exists(path):
-            # Live dir present: a leftover staged copy is pre-swap, a
-            # leftover backup is post-swap; the live dir is
-            # authoritative in both cases.
-            shutil.rmtree(staged, ignore_errors=True)
-            shutil.rmtree(prev, ignore_errors=True)
-        elif os.path.exists(staged):
-            if _stage_is_complete(staged):
-                # Mid-swap crash: the staged copy is complete (the
-                # producer's completion stamp present) — finish the
-                # swap it was about to make.
-                os.rename(staged, path)
-                shutil.rmtree(prev, ignore_errors=True)
-            elif os.path.exists(prev):
-                # Torn STAGING write with a backup present: the stage
-                # never completed; restore the pre-swap copy.
-                shutil.rmtree(staged)
-                os.rename(prev, path)
-            else:
-                # Torn FIRST-WRITE staging (live dir never existed, no
-                # _SUCCESS): nothing was ever committed — drop the torn
-                # copy; the fold/bootstrap that produced it re-runs
-                # (watermark is written only after a completed swap).
-                shutil.rmtree(staged)
-        elif os.path.exists(prev):
-            # Backup only (staged copy gone — outside compact_state's
-            # own crash window, e.g. partial manual cleanup): restore
-            # the pre-compaction copy rather than losing it.
-            os.rename(prev, path)
+    commit_batch(batch, docs_path, batch_id)
+    commit_batch(b_index, index_path, batch_id)
 
 
 def ingest_dedup_stream(
@@ -239,9 +138,9 @@ def ingest_dedup_stream(
     state a corpus-only re-bootstrap would silently paper over (every
     probe would miss duplicates against those batches), so it raises."""
     spark = arrivals.sparkSession
-    recover_torn_swap(state_dir)
-    if _read_or_none(spark, os.path.join(state_dir, "index")) is None:
-        docs = _read_or_none(spark, os.path.join(state_dir, "docs"))
+    recover_torn_swap(state_dir, _STORES)
+    if read_or_none(spark, os.path.join(state_dir, "index")) is None:
+        docs = read_or_none(spark, os.path.join(state_dir, "docs"))
         if docs is not None:
             latest = docs.agg(F.max("_batch_id")).head()[0]
             if latest is not None and latest > -1:
@@ -267,91 +166,43 @@ def ingest_dedup_stream(
                 batch_df.sparkSession, state_dir, upto_batch_id=batch_id
             )
 
-    writer = (
-        arrivals.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(arrivals, handle, checkpoint, available_now)
 
 
 def compact_state(
     spark: SparkSession, state_dir: str, upto_batch_id: int
 ) -> None:
-    """Index maintenance (VERDICT r7 #5): merge every index/docs
-    partition with ``_batch_id <= upto_batch_id`` into the baseline
-    partition (``_batch_id = -1``), bounding the partition count — at
+    """Index maintenance: merge every index/docs partition with
+    ``_batch_id <= upto_batch_id`` into the baseline partition
+    (``_batch_id = -1``), bounding the partition count — at
     continuous-arrival cadence the one-partition-per-micro-batch layout
     is otherwise a small-files problem. The merged index rows are
-    re-clustered by ``_band`` on the way in (``repartition("_band")``),
-    the probe-side pruning layout the 100 TB note recommends, so a
-    band-equality probe reads band-clustered files instead of hundreds
-    of per-batch fragments.
+    re-clustered by ``_band`` on the way in, the probe-side pruning
+    layout the 100 TB note recommends, so a band-equality probe reads
+    band-clustered files instead of hundreds of per-batch fragments.
 
-    Replay-safety contract: ``upto_batch_id`` must be STRICTLY older
-    than the newest committed batch. foreachBatch is at-least-once only
-    at the tip — once the checkpoint has committed a later epoch, an
-    older batch id can never re-fire — so folding fully-committed
-    batches into the baseline cannot create the self-pair hazard (a
-    replayed batch finding its own rows in the 'before me' state).
-    Enforced with a ValueError; probing and pair emission are unchanged
-    because compaction only relabels ``_batch_id`` (the probe's
-    exclusion filter matches no compacted row, exactly as before).
+    ``upto_batch_id`` must be STRICTLY older than the newest committed
+    batch (``state.refuse_folding_tip``; ValueError otherwise). Both
+    stores are validated BEFORE either is mutated, so a rejected call
+    mutates nothing even when a torn commit left index/docs at different
+    latest batches. Each store is folded through ``state.staged_swap``,
+    docs first (the commit path's order, so there is one ordering to
+    reason about), and ``recover_torn_swap`` — run here on entry and by
+    ``ingest_dedup_stream`` on startup — completes or rolls back a torn
+    swap. Stop the ingest stream before compacting: a concurrently
+    running probe may race the swap window.
 
-    The rewrite goes through a staging directory and swaps in with two
-    renames (live -> _old, staged -> live) before the old copy is
-    deleted, so a crash at ANY point leaves a complete copy of the data
-    on disk (mid-swap it sits at the _old/_compacting paths;
-    ``recover_torn_swap`` — run here on entry and by
-    ``ingest_dedup_stream`` on startup — completes or rolls back the
-    swap, never a silent partial state). The renames are the
-    non-atomic step on an object store — a deployment fronts the swap
-    with a table format (Delta/Iceberg) or a manifest, same caveat as
-    every directory-swap in this repo. Stop the ingest stream before
-    compacting: a concurrently running probe may race the swap window.
-
-    Both subdirectories are validated against the replayable-tip guard
-    BEFORE either is mutated, so a rejected call mutates nothing even
-    when a torn commit left index/docs at different latest batches."""
-    import shutil
-
-    recover_torn_swap(state_dir)
-    # docs first, index last — same ordering as the commit path. The
-    # convention is immaterial HERE (compaction only relabels _batch_id,
-    # which the probe's exclusion filter ignores for fully-committed
-    # batches), but a mid-loop crash still leaves the two stores at
-    # different compaction states, and keeping one ordering everywhere
-    # means there is exactly one invariant to reason about (ADVICE r8 #4).
-    paths = {sub: os.path.join(state_dir, sub) for sub in ("docs", "index")}
-    for sub, path in paths.items():
-        latest = spark.read.parquet(path).agg(F.max("_batch_id")).head()[0]
-        if latest is not None and upto_batch_id >= latest:
-            raise ValueError(
-                f"compact_state(upto_batch_id={upto_batch_id}) would fold the "
-                f"replayable tip of {sub} (latest committed batch {latest}); "
-                "pass upto_batch_id < latest"
-            )
-    for sub, path in paths.items():
-        df = spark.read.parquet(path)
-        old = df.where(F.col("_batch_id") <= upto_batch_id).withColumn(
-            "_batch_id", F.lit(-1)
-        )
-        if sub == "index":
-            old = old.repartition(F.col("_band"))
-        tip = df.where(F.col("_batch_id") > upto_batch_id)
-        tmp = path + "_compacting"
-        shutil.rmtree(tmp, ignore_errors=True)
-        old.unionByName(tip).write.mode("overwrite").partitionBy(
-            "_batch_id"
-        ).parquet(tmp)
-        mark_stage_complete(tmp)
-        prev = path + "_old"
-        shutil.rmtree(prev, ignore_errors=True)
-        os.rename(path, prev)
-        os.rename(tmp, path)
-        shutil.rmtree(prev)
+    The tips are rewritten, not hard-linked (``link_tip=False``): the
+    index commits write ``_band``/``_bh`` as required parquet fields,
+    and the stream-ingest benchmark workload (perfbench/workloads.py)
+    reads the compacted index with pyarrow, which refuses files whose
+    schemas differ in nullability."""
+    recover_torn_swap(state_dir, _STORES)
+    docs_path, index_path = (os.path.join(state_dir, s) for s in _STORES)
+    for path in (docs_path, index_path):
+        refuse_folding_tip(spark, path, upto_batch_id)
+    fold_into_baseline(spark, docs_path, upto_batch_id, link_tip=False)
+    fold_into_baseline(spark, index_path, upto_batch_id, "_band", link_tip=False)
 
 
 def emitted_pairs(spark: SparkSession, state_dir: str) -> DataFrame:

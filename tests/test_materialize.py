@@ -1,15 +1,17 @@
 """materialize(): the one configurable lineage-cut primitive.
 
 Every iterative operator routes its lineage cut through
-``operators/materialize.py``; these tests exercise all three modes and
+``operators/materialize.py``; these tests exercise both modes and
 prove an iterative consumer is mode-agnostic (same result under
-local / checkpoint / persist).
+local / checkpoint).
 """
 
 from __future__ import annotations
 
+import os
+import threading
+
 import pytest
-from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from odl_etl_spark.operators.materialize import MODE_CONF, materialize
@@ -53,24 +55,19 @@ def test_checkpoint_mode_with_dir(spark, tmp_path):
         _clear_checkpoint_dir(spark)
 
 
-def test_persist_mode_pins_disk_only(spark):
-    df = _src(spark)
-    out = materialize(df, mode="persist")
-    try:
-        assert out.storageLevel == StorageLevel.DISK_ONLY
-        assert out.count() == 100
-    finally:
-        out.unpersist()
-
-
-def test_mode_from_session_conf(spark):
-    spark.conf.set(MODE_CONF, "persist")
+def test_mode_from_session_conf(spark, tmp_path):
+    ckpt = tmp_path / "ckpt"
+    spark.sparkContext.setCheckpointDir(str(ckpt))
+    spark.conf.set(MODE_CONF, "checkpoint")
     try:
         out = materialize(_src(spark))
-        assert out.storageLevel == StorageLevel.DISK_ONLY
-        out.unpersist()
+        assert out.count() == 100
+        # A reliable checkpoint wrote its blocks to the dir; the default
+        # local mode writes nothing there.
+        assert any(files for _, _, files in os.walk(ckpt))
     finally:
         spark.conf.unset(MODE_CONF)
+        _clear_checkpoint_dir(spark)
 
 
 def test_unknown_mode_raises(spark):
@@ -95,7 +92,7 @@ def test_enable_durable_materialize_one_call(spark, tmp_path):
 
 def test_iterative_consumer_is_mode_agnostic(spark, tmp_path):
     """connected_components routes every cut through materialize();
-    its output must be identical under all three modes."""
+    its output must be identical under both modes."""
     from odl_etl_spark.operators.components import connected_components
 
     edges = spark.createDataFrame(
@@ -112,11 +109,56 @@ def test_iterative_consumer_is_mode_agnostic(spark, tmp_path):
     spark.conf.set(MODE_CONF, "checkpoint")
     try:
         assert run() == want
-        spark.conf.set(MODE_CONF, "persist")
-        assert run() == want
     finally:
         spark.conf.unset(MODE_CONF)
         _clear_checkpoint_dir(spark)
+
+
+def test_overlapping_aqe_off_calls_restore_aqe(spark, monkeypatch):
+    """materialize_aqe_off toggles the session-global AQE flag. Two
+    overlapping calls (a foreachBatch thread next to a main-thread
+    build) must leave it as it was: without serialization the second
+    call saves the first's "false" as its previous value and, finishing
+    last, leaves AQE off for the rest of the session. The cut itself is
+    replaced by a stub that holds each call inside its critical section
+    until released, so the interleaving is forced, not timed."""
+    import odl_etl_spark.operators.materialize as m
+
+    key = "spark.sql.adaptive.enabled"
+    inside = {"a": threading.Event(), "b": threading.Event()}
+    release = {"a": threading.Event(), "b": threading.Event()}
+
+    def held_cut(df, mode=None):
+        name = threading.current_thread().name
+        inside[name].set()
+        assert release[name].wait(30)
+        return df
+
+    monkeypatch.setattr(m, "materialize", held_cut)
+    df = spark.range(1)
+    prev = spark.conf.get(key, "true")
+    spark.conf.set(key, "true")
+    threads = {
+        n: threading.Thread(target=m.materialize_aqe_off, args=(df,), name=n)
+        for n in ("a", "b")
+    }
+    try:
+        threads["a"].start()
+        assert inside["a"].wait(30)
+        threads["b"].start()
+        # Unserialized, b enters while a still holds AQE off.
+        inside["b"].wait(2)
+        release["a"].set()
+        threads["a"].join(30)
+        assert inside["b"].wait(30)
+        release["b"].set()
+        threads["b"].join(30)
+        assert not threads["a"].is_alive() and not threads["b"].is_alive()
+        assert spark.conf.get(key) == "true"
+    finally:
+        for ev in release.values():
+            ev.set()
+        spark.conf.set(key, prev)
 
 
 def test_checkpoint_mode_survives_executor_loss():

@@ -10,40 +10,10 @@ noise, not semantic drift).
 
 from __future__ import annotations
 
-import math
-from datetime import date, datetime
-
 import pytest
 
 from odl_etl_spark.queries import registry
-
-
-def canon_cell(v):
-    if v is None:
-        return "∅"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "nan"
-        if v == 0:
-            return "0"
-        return f"{v:.6g}"
-    if isinstance(v, bool):
-        return str(int(v))
-    if isinstance(v, datetime):
-        return v.isoformat()
-    if isinstance(v, date):
-        return v.isoformat()
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(canon_cell(x) for x in v) + "]"
-    if isinstance(v, dict):
-        return "{" + ",".join(f"{k}:{canon_cell(x)}" for k, x in sorted(v.items())) + "}"
-    return str(v)
-
-
-def canon_rows(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted("|".join(canon_cell(r[i]) for i in order) for r in rows)
-
+from tools.selfcheck import canon_rows
 
 ORACLED = [s for s in registry().values() if s.oracle is not None]
 ROWS_ONLY = [s for s in registry().values() if s.oracle is None]

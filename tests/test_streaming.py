@@ -1735,7 +1735,7 @@ def test_fold_pairs_first_fold_torn_staging_self_heals(
     monkeypatch.setattr(os, "rename", real_rename)
     assert not os.path.exists(c_path)
     staged = c_path + "_compacting"
-    from odl_etl_spark.streaming.ingest_dedup import _STAGE_MARKER
+    from odl_etl_spark.streaming.state import _STAGE_MARKER
 
     assert os.path.exists(os.path.join(staged, _STAGE_MARKER))
     assert folded_upto(spark, state) is None  # watermark is written LAST

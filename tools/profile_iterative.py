@@ -21,10 +21,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 KEYS = ["dedup_cluster", "graph_pagerank", "graph_triangles"]
-# NOTE: mode='persist' is intentionally absent — measured >200s on
-# dedup_cluster (vs 3.6s local): persist keeps lineage, so per-iteration
-# plans grow superlinearly on iterative keys. persist is for one-shot
-# branch reuse, not iteration; the materialize() docstring now says so.
+# Every materialize() mode: both cut lineage (see its module docstring).
 MODES = ["local", "checkpoint"]
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 

@@ -42,6 +42,8 @@ def canon_cell(v):
         return v.isoformat()
     if isinstance(v, (list, tuple)):
         return "[" + ",".join(canon_cell(x) for x in v) + "]"
+    if isinstance(v, dict):
+        return "{" + ",".join(f"{k}:{canon_cell(x)}" for k, x in sorted(v.items())) + "}"
     return str(v)
 
 
